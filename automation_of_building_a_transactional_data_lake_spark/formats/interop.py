@@ -43,16 +43,27 @@ sources all raise naming the feature.
 Scale: log replay and timeline listing are O(metadata) driver work;
 the data read is a plain ``spark.read.parquet`` over the active file
 list (file-parallel, column-pruned, filter-pushed by Spark itself).
-Writes stage through Spark's parquet writer and commit with one log
-append — O(batch), single-writer (no optimistic-concurrency loop
-against OTHER engines' writers; use the engine-native formats for
-contended tables). Merge key frames are pinned + size-gated
-(broadcast only for CDC-sized batches; AQE picks the join for
-backfills).
+Writes stage through Spark's parquet writer — O(batch) — and then
+commit through ONE function per format: ``_delta_commit`` (log
+version ``<v>.json``), ``_ice_commit_metadata`` (``v<N>.metadata.json``,
+then ``version-hint.text``) and ``_hudi_complete`` (the completed
+``.hoodie`` instant). All three publish through ``_publish``: the
+payload is serialized first, written to a same-directory
+``.<name>.<uuid>.tmp`` and hard-linked to the final name, so a commit
+is put-if-absent (a rival writer's version raises FileExistsError)
+and a writer killed at any point leaves only that ignored temp file
+plus staged data files no commit references (no reader sees them;
+``vacuum_delta`` reclaims Delta's after its grace window) — never a
+torn commit. Single-writer: no optimistic-concurrency loop against
+OTHER engines' writers (Delta appends alone retry at the next
+version); use the engine-native formats for contended tables. Merge
+key frames are pinned + size-gated (broadcast only for CDC-sized
+batches; AQE picks the join for backfills).
 """
 
 from __future__ import annotations
 
+import contextlib
 import itertools
 import json
 import os
@@ -64,7 +75,7 @@ import urllib.parse
 import uuid
 import zlib
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
@@ -118,6 +129,29 @@ def _delete_side(
     except OSError:
         return frame
     return F.broadcast(frame) if total <= _MAX_BROADCAST_DELETE_BYTES else frame
+
+
+def _publish(path: str, payload: str, replace: bool = False) -> None:
+    """Publish one commit file whole. ``payload`` is already serialized
+    and lands in a same-directory ``.<name>.<uuid>.tmp`` (Delta's own
+    temp convention) first; the temp is then hard-linked to ``path`` —
+    put-if-absent, raising FileExistsError when another writer owns the
+    name — or, with ``replace=True`` (pointer files such as
+    ``version-hint.text``), renamed over it. A writer killed at any
+    point leaves at most the ignored temp file, never a torn commit."""
+    d, name = os.path.split(path)
+    tmp = os.path.join(d, f".{name}.{uuid.uuid4()}.tmp")
+    fd = os.open(tmp, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+    try:
+        with os.fdopen(fd, "w", encoding="utf-8") as f:
+            f.write(payload)
+        if replace:
+            os.replace(tmp, path)
+        else:
+            os.link(tmp, path)
+    finally:
+        with contextlib.suppress(FileNotFoundError):
+            os.unlink(tmp)
 
 
 # -- Delta Lake: transaction-log replay (read) ------------------------------
@@ -459,29 +493,11 @@ def add_delta_constraint(
             set(proto["writerFeatures"]) | {"checkConstraints"}
         )
         actions.append({"protocol": proto})
-    ts = int(time.time() * 1000)
     actions.append({"metaData": new_meta})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "ADD CONSTRAINT",
-                "operationParameters": {"name": name.lower(), "expr": expr},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    return _delta_commit(
+        table_path, state["version"], actions, "ADD CONSTRAINT",
+        {"name": name.lower(), "expr": expr}, int(time.time() * 1000),
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 def drop_delta_constraint(table_path: str, name: str) -> int:
@@ -497,29 +513,10 @@ def drop_delta_constraint(table_path: str, name: str) -> int:
     del conf[key]
     new_meta = dict(meta)
     new_meta["configuration"] = conf
-    ts = int(time.time() * 1000)
-    actions = [
-        {"metaData": new_meta},
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "DROP CONSTRAINT",
-                "operationParameters": {"name": name.lower()},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        },
-    ]
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
+    return _delta_commit(
+        table_path, state["version"], [{"metaData": new_meta}],
+        "DROP CONSTRAINT", {"name": name.lower()}, int(time.time() * 1000),
+    )
 
 
 def _norm_pv(pv) -> dict:
@@ -1183,14 +1180,46 @@ def _delta_write_checkpoint(table_path: str, version: int | None = None) -> str 
     ckpt_path = os.path.join(log_dir, f"{v:020d}.checkpoint.parquet")
     pq.write_table(pa.Table.from_pylist(rows, schema=schema), ckpt_path)
     # _last_checkpoint LAST: readers that see it must find the file.
-    with open(os.path.join(log_dir, _LAST_CHECKPOINT), "w", encoding="utf-8") as f:
-        json.dump({"version": v, "size": len(rows)}, f)
+    _publish(
+        os.path.join(log_dir, _LAST_CHECKPOINT),
+        json.dumps({"version": v, "size": len(rows)}),
+        replace=True,
+    )
     return ckpt_path
 
 
 def _delta_maybe_checkpoint(table_path: str, version: int) -> None:
     if version > 0 and version % _DELTA_CHECKPOINT_INTERVAL == 0:
         _delta_write_checkpoint(table_path, version)
+
+
+def _delta_commit(
+    table_path: str,
+    prev_version: int,
+    actions: list[dict],
+    operation: str,
+    params: dict,
+    ts: int,
+) -> int:
+    """THE Delta commit: ``actions`` plus their ``commitInfo`` become
+    log version ``prev_version + 1``, published put-if-absent (a rival
+    writer that took the version surfaces as FileExistsError), then the
+    periodic checkpoint. Returns the committed version."""
+    version = prev_version + 1
+    info = {
+        "commitInfo": {
+            "timestamp": ts,
+            "operation": operation,
+            "operationParameters": params,
+            "engineInfo": "transactional-data-lake-spark interop",
+        }
+    }
+    _publish(
+        os.path.join(table_path, _DELTA_LOG, f"{version:020d}.json"),
+        "\n".join(json.dumps(a) for a in [*actions, info]) + "\n",
+    )
+    _delta_maybe_checkpoint(table_path, version)
+    return version
 
 
 def _delta_replay(table_path: str, version: int | None) -> dict:
@@ -2174,9 +2203,10 @@ def write_delta(
     ``{"delta.enableChangeDataFeed": "true"}`` — which also raises the
     commit's writer protocol to 4 per spec); altering an existing
     table's properties is refused.
-    Single-writer: the commit is an O_EXCL create of the next version's
-    log file, so two engine-native writers cannot clobber each other,
-    but no conflict resolution is attempted against foreign writers."""
+    Single-writer: the commit is a put-if-absent publish of the next
+    version's log file, so two engine-native writers cannot clobber
+    each other, but no conflict resolution is attempted against
+    foreign writers."""
     if mode not in ("error", "overwrite", "append"):
         raise ValueError(f"mode must be error|overwrite|append, got {mode!r}")
     partition_by = list(partition_by or [])
@@ -2185,8 +2215,9 @@ def write_delta(
     if exists and mode == "error":
         raise FileExistsError(f"Delta table already exists at {table_path}")
 
+    ts = int(time.time() * 1000)
     actions: list[dict] = []
-    next_version = 0
+    prev_version = -1
     if not exists:
         conf = dict(configuration or {})
         cdf_on = conf.get("delta.enableChangeDataFeed", "false").lower() == "true"
@@ -2230,7 +2261,7 @@ def write_delta(
                     "schemaString": df.schema.json(),
                     "partitionColumns": partition_by,
                     "configuration": conf,
-                    "createdTime": int(time.time() * 1000),
+                    "createdTime": ts,
                 }
             }
         )
@@ -2254,7 +2285,7 @@ def write_delta(
         _delta_enforce_constraints(
             df, state["metaData"].get("configuration"), state["metaData"]
         )
-        next_version = state["version"] + 1
+        prev_version = state["version"]
         recorded_parts = list(state["metaData"].get("partitionColumns") or [])
         if partition_by and partition_by != recorded_parts:
             raise ValueError(
@@ -2283,7 +2314,6 @@ def write_delta(
             }
             partition_by = [phys_map[c] for c in partition_by]
         if mode == "overwrite":
-            ts = int(time.time() * 1000)
             for path in state["files"]:
                 actions.append(
                     {"remove": {"path": path, "deletionTimestamp": ts,
@@ -2292,20 +2322,12 @@ def write_delta(
 
     adds = _delta_stage_files(df, table_path, partition_by)
     actions.extend({"add": a} for a in adds)
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": int(time.time() * 1000),
-                "operation": "WRITE",
-                "operationParameters": {"mode": mode},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
-    )
     while True:
-        log_path = os.path.join(log_dir, f"{next_version:020d}.json")
         try:
-            fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+            return _delta_commit(
+                table_path, prev_version, actions, "WRITE",
+                {"mode": mode}, ts,
+            )
         except FileExistsError:
             # Another writer took this version. AddFile-only commits
             # never conflict under Delta's own OCC rules (nothing we
@@ -2318,7 +2340,7 @@ def write_delta(
                 raise
             state = _delta_replay(table_path, None)
             _delta_guard_writer(state["protocol"], state["metaData"], mode)
-            next_version = state["version"] + 1
+            prev_version = state["version"]
             # Lost CREATE race (append on a not-yet-existing table):
             # the winner owns the table identity — REBUILD the actions
             # without our creation protocol/metaData instead of
@@ -2352,16 +2374,6 @@ def write_delta(
                     a for a in actions
                     if "protocol" not in a and "metaData" not in a
                 ]
-            continue
-        break
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 # -- Delta Lake: keyed MERGE (upsert / delete) on a foreign table -----------
@@ -2936,32 +2948,10 @@ def merge_delta(
             if return_stats
             else state["version"]
         )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "MERGE",
-                "operationParameters": {
-                    "mode": mode,
-                    "key": key,
-                    "strategy": strategy,
-                },
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    next_version = _delta_commit(
+        table_path, state["version"], actions, "MERGE",
+        {"mode": mode, "key": key, "strategy": strategy}, ts,
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
     return (
         (next_version, {"matched": matched_n})
         if return_stats
@@ -3050,27 +3040,10 @@ def compact_delta(spark: SparkSession, table_path: str) -> int | None:
     for a in _delta_stage_files(survivors, table_path, cm_pcols):
         a["dataChange"] = False
         actions.append({"add": a})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "REORG",
-                "operationParameters": {"applyPurge": True},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    return _delta_commit(
+        table_path, state["version"], actions, "REORG",
+        {"applyPurge": True}, ts,
     )
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 def _delta_rewrite_where(
@@ -3093,14 +3066,7 @@ def _delta_rewrite_where(
     read (executor-side decode) and restage CLEAN — the rewrite also
     purges their DV debt. Rows where the predicate is NULL survive
     (SQL semantics: only provably-TRUE rows are affected)."""
-    where_n = _norm_where(where)
-    if assigns is None and not where_n:
-        raise ValueError(
-            "DELETE requires a predicate (refusing an implicit "
-            "full-table delete; overwrite explicitly instead)"
-        )
-    if assigns is not None and not assigns:
-        raise ValueError("UPDATE requires at least one SET assignment")
+    where_n, hit = _dml_request(where, assigns)
     state = _delta_replay(table_path, None)
     meta = state["metaData"]
     _delta_guard_writer(state["protocol"], meta, "merge")
@@ -3194,11 +3160,6 @@ def _delta_rewrite_where(
         )
     cand_df = cand_df.drop("__ri")
 
-    hit = (
-        F.coalesce(_where_cond(where_n), F.lit(False))
-        if where_n
-        else F.lit(True)
-    )
     matched = cand_df.filter(hit)
     # Phase 2: only files that HOLD a matching row rewrite; clean
     # candidates carry forward verbatim (no remove, no add). The
@@ -3214,22 +3175,12 @@ def _delta_rewrite_where(
     n_aff = matched.count()
 
     if assigns is None:
-        out_df = rewrite_df.filter(~hit).select(*cols)
+        out_df = _dml_project(rewrite_df, hit, None).select(*cols)
         cdc_df = matched.select(*cols).withColumn(
             "_change_type", F.lit("delete")
         )
         operation, opp = "DELETE", {"predicate": repr(where)}
     else:
-        upd = []
-        post = []
-        for f in schema.fields:
-            if f.name in assigns:
-                new_v = F.expr(assigns[f.name]).cast(f.dataType)
-                upd.append(F.when(hit, new_v).otherwise(F.col(f.name)).alias(f.name))
-                post.append(new_v.alias(f.name))
-            else:
-                upd.append(F.col(f.name))
-                post.append(F.col(f.name))
         # Generated columns whose expression references an assigned
         # base column RECOMPUTE on updated rows (native behavior — SET
         # base_col alone is legal and the generated value follows);
@@ -3246,14 +3197,16 @@ def _delta_rewrite_where(
                 for a in assigns
             ):
                 regen.append((f0["name"], ge, json.dumps(f0["type"])))
-        # Every SET expression evaluates against the PRE-update row
-        # (single select — SQL UPDATE semantics, so SET a = b, b = a
-        # swaps), cast to the declared column type. Recomputed
-        # generated columns then evaluate against the POST-assign row
-        # in a second pass.
+        # Every SET expression evaluates against the PRE-update row;
+        # recomputed generated columns then evaluate against the
+        # POST-assign row in a second pass.
         from pyspark.sql.types import _parse_datatype_json_string
 
-        out_pre = rewrite_df.select(*upd, hit.alias("__upd_hit"))
+        out_pre = _dml_project(
+            rewrite_df.withColumn("__upd_hit", hit),
+            F.col("__upd_hit"),
+            assigns,
+        )
         for gname, ge, tj in regen:
             out_pre = out_pre.withColumn(
                 gname,
@@ -3267,7 +3220,7 @@ def _delta_rewrite_where(
         # UPDATE is the one rewrite that can introduce a violating
         # value); recomputed generated columns are dropped first so
         # the validator recomputes rather than flags the stale value.
-        post_df = matched.select(*post).select(*cols)
+        post_df = _dml_project(matched, F.lit(True), assigns).select(*cols)
         if regen:
             post_df = post_df.drop(*[g for g, _, _ in regen])
         post_df = _delta_apply_generated(post_df, meta).select(*cols)
@@ -3321,27 +3274,9 @@ def _delta_rewrite_where(
         actions.extend(
             {"cdc": c} for c in _delta_stage_cdc(cdc_df, table_path, cm_pcols)
         )
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": operation,
-                "operationParameters": opp,
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
-    )
-    next_version = state["version"] + 1
-    log_path = os.path.join(table_path, _DELTA_LOG, f"{next_version:020d}.json")
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version, n_aff
+    return _delta_commit(
+        table_path, state["version"], actions, operation, opp, ts
+    ), n_aff
 
 
 def delete_delta_where(
@@ -3389,9 +3324,7 @@ def update_delta_where(
     (or ``[]``) updates every row — UPDATE without WHERE is legal SQL,
     unlike the guarded full-table DELETE. Returns (committed version,
     updated row count); no match commits nothing."""
-    if not isinstance(assigns, dict):
-        raise TypeError("assigns must be a {column: sql_expression} dict")
-    return _delta_rewrite_where(spark, table_path, where, dict(assigns))
+    return _delta_rewrite_where(spark, table_path, where, assigns)
 
 
 def restore_delta(table_path: str, version: int) -> int:
@@ -3434,29 +3367,10 @@ def restore_delta(table_path: str, version: int) -> int:
         actions.append({"add": add})
     if not actions:
         return cur["version"]  # same file set: no-op
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "RESTORE",
-                "operationParameters": {"version": int(version)},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
+    return _delta_commit(
+        table_path, cur["version"], actions, "RESTORE",
+        {"version": int(version)}, ts,
     )
-    next_version = cur["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 def _delta_layout_rewrite(
@@ -3568,29 +3482,9 @@ def _delta_layout_rewrite(
         opp["zOrderBy"] = json.dumps(list(zorder_by))
     else:
         opp["binpack"] = True
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "OPTIMIZE",
-                "operationParameters": opp,
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
-    )
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version, {"removed": n_removed, "added": n_added}
+    return _delta_commit(
+        table_path, state["version"], actions, "OPTIMIZE", opp, ts
+    ), {"removed": n_removed, "added": n_added}
 
 
 def binpack_delta(
@@ -3860,29 +3754,9 @@ def truncate_delta(table_path: str) -> tuple[int, int | None]:
         if add.get("deletionVector"):
             rm["deletionVector"] = add["deletionVector"]
         actions.append({"remove": rm})
-    actions.append(
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "TRUNCATE",
-                "operationParameters": {},
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        }
-    )
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
-    )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version, n_rows
+    return _delta_commit(
+        table_path, state["version"], actions, "TRUNCATE", {}, ts
+    ), n_rows
 
 
 def truncate_iceberg(table_path: str) -> tuple[int, int | None]:
@@ -4153,7 +4027,6 @@ def alter_delta_table(
         new_meta["partitionColumns"] = [
             ren_l.get(c.lower(), c) for c in meta["partitionColumns"]
         ]
-    ts = int(time.time() * 1000)
     opp = {}
     if add_columns:
         opp["add"] = json.dumps([[n, t] for n, t in add_columns])
@@ -4161,30 +4034,10 @@ def alter_delta_table(
         opp["drop"] = json.dumps(drop_columns)
     if rename_columns:
         opp["rename"] = json.dumps(rename_columns)
-    actions = [
-        {"metaData": new_meta},
-        {
-            "commitInfo": {
-                "timestamp": ts,
-                "operation": "ALTER TABLE",
-                "operationParameters": opp,
-                "engineInfo": "transactional-data-lake-spark interop",
-            }
-        },
-    ]
-    next_version = state["version"] + 1
-    log_path = os.path.join(
-        table_path, _DELTA_LOG, f"{next_version:020d}.json"
+    return _delta_commit(
+        table_path, state["version"], [{"metaData": new_meta}],
+        "ALTER TABLE", opp, int(time.time() * 1000),
     )
-    fd = os.open(log_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            f.write("\n".join(json.dumps(a) for a in actions) + "\n")
-    except Exception:
-        os.unlink(log_path)
-        raise
-    _delta_maybe_checkpoint(table_path, next_version)
-    return next_version
 
 
 # -- Apache Hudi (copy-on-write): timeline read -----------------------------
@@ -5431,6 +5284,9 @@ def _hudi_complete(
     delta: bool = False,
     schema_json: str | None = None,
 ) -> None:
+    """THE Hudi commit: completes ``instant`` by publishing its
+    ``.commit`` / ``.deltacommit`` / ``.replacecommit`` metadata
+    put-if-absent, then drops the instant's requested/inflight markers."""
     hdir = os.path.join(table_path, _HOODIE_DIR)
     meta = {
         "partitionToWriteStats": stats,
@@ -5448,10 +5304,7 @@ def _hudi_complete(
         # instant on (their pre-instant slices hide at read time).
         meta["partitionToReplaceFileIds"] = replaced_fids
         ext = "replacecommit"
-    commit_path = os.path.join(hdir, f"{instant}.{ext}")
-    fd = os.open(commit_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    with os.fdopen(fd, "w", encoding="utf-8") as f:
-        json.dump(meta, f)
+    _publish(os.path.join(hdir, f"{instant}.{ext}"), json.dumps(meta))
     # requested/inflight markers are cleaned once completed.
     for ext in ("requested", "inflight"):
         p = os.path.join(hdir, f"{instant}.{ext}")
@@ -5464,7 +5317,6 @@ def _hudi_with_meta(
     fid_col, ts_render: str = "cast",
 ) -> DataFrame:
     pp = _hudi_partition_path_col(partition_by, df, ts_render)
-    fname = F.concat(fid_col, F.lit(f"_0-0-0_{instant}.parquet"))
     return (
         df.withColumn("__hudi_pp", pp)
         .withColumn("__hudi_fid", fid_col)
@@ -5475,19 +5327,32 @@ def _hudi_with_meta(
         )
         .withColumn("_hoodie_record_key", F.col(record_key).cast("string"))
         .withColumn("_hoodie_partition_path", F.col("__hudi_pp"))
-        .withColumn("_hoodie_file_name", fname)
-        .withColumn(
-            "__hudi_pp_dir",
-            F.when(F.col("__hudi_pp") == "", F.lit("__HUDI_ROOT__")).otherwise(
-                F.col("__hudi_pp")
-            ),
-        )
     )
 
 
-def _hudi_select_order(df: DataFrame, business_cols: list[str]) -> DataFrame:
-    return df.select(
-        *_HUDI_META_COLS, *business_cols, "__hudi_fid", "__hudi_pp_dir"
+def _hudi_staged(
+    df: DataFrame,
+    business_cols: list[str],
+    instant: str,
+    pp_col: str = "__hudi_pp",
+) -> DataFrame:
+    """The frame ``_hudi_stage_commit`` writes: the meta columns with
+    ``_hoodie_file_name`` naming ``__hudi_fid``'s base file at
+    ``instant``, the business columns, then the group id and the
+    partition directory taken from ``pp_col`` (the table root stages
+    under ``__HUDI_ROOT__``)."""
+    return (
+        df.withColumn(
+            "_hoodie_file_name",
+            F.concat(F.col("__hudi_fid"), F.lit(f"_0-0-0_{instant}.parquet")),
+        )
+        .withColumn(
+            "__hudi_pp_dir",
+            F.when(F.col(pp_col) == "", F.lit("__HUDI_ROOT__")).otherwise(
+                F.col(pp_col)
+            ),
+        )
+        .select(*_HUDI_META_COLS, *business_cols, "__hudi_fid", "__hudi_pp_dir")
     )
 
 
@@ -5618,6 +5483,18 @@ def _hudi_avro_schema(business_fields) -> dict:
          "default": None}
     )
     return {"type": "record", "name": "hudi_log_record", "fields": fields}
+
+
+def _hudi_schema_json(df: DataFrame, business_cols: list[str]) -> str | None:
+    """The Avro write schema of ``df``'s ``business_cols`` as a commit
+    records it (``extraMetadata.schema``, native Hudi's schema
+    authority), or None when a type has no Avro mapping here — CoW
+    reads then recover the schema from the parquet files themselves."""
+    types = {f.name: f for f in df.schema.fields}
+    try:
+        return json.dumps(_hudi_avro_schema([types[c] for c in business_cols]))
+    except NotImplementedError:
+        return None
 
 
 def _spark_to_avro_val(v):
@@ -6041,12 +5918,13 @@ def _hudi_log_write(
         ]
         if needs_base:
             nb_set = {f"{pp}\x00{fid}" for pp, fid in needs_base}
-            staged = _hudi_select_order(
+            staged = _hudi_staged(
                 _hudi_with_meta(
                     to_base, record_key, partition_by, instant,
                     F.col("__fid"), ts_render=ts_render,
                 ),
                 business_cols,
+                instant,
             )
             for pp, ss in _hudi_stage_commit(
                 staged, table_path, instant, expected_fids=nb_set
@@ -6122,22 +6000,8 @@ def compact_hudi(
     business_cols = [
         f.name for f in fields if not f.name.startswith("_hoodie_")
     ]
-    staged = (
-        merged.join(F.broadcast(fmap), "__fp")
-        .withColumn("__hudi_pp", F.col("__mpp"))
-        .withColumn(
-            "__hudi_pp_dir",
-            F.when(F.col("__hudi_pp") == "", F.lit("__HUDI_ROOT__")).otherwise(
-                F.col("__hudi_pp")
-            ),
-        )
-        .withColumn(
-            "_hoodie_file_name",
-            F.concat(F.col("__hudi_fid"), F.lit(f"_0-0-0_{instant}.parquet")),
-        )
-        .select(
-            *_HUDI_META_COLS, *business_cols, "__hudi_fid", "__hudi_pp_dir"
-        )
+    staged = _hudi_staged(
+        merged.join(F.broadcast(fmap), "__fp"), business_cols, instant, "__mpp"
     )
     expected = {f"{pp}\x00{fid}" for pp, fid in slice_logs}
     stats = _hudi_stage_commit(
@@ -6212,23 +6076,12 @@ def cluster_hudi(
                 ).cast("string"),
             ),
         )
-        .withColumn("__hudi_pp", F.col("__mpp"))
-        .withColumn(
-            "__hudi_pp_dir",
-            F.when(F.col("__hudi_pp") == "", F.lit("__HUDI_ROOT__")).otherwise(
-                F.col("__hudi_pp")
-            ),
-        )
-        .withColumn(
-            "_hoodie_file_name",
-            F.concat(F.col("__hudi_fid"), F.lit(f"_0-0-0_{instant}.parquet")),
-        )
     )
     business_cols = [
         c for c in df.columns
         if not c.startswith("_hoodie_") and c != "__fp"
     ]
-    staged = _hudi_select_order(out, business_cols)
+    staged = _hudi_staged(out, business_cols, instant, "__mpp")
     stats = _hudi_stage_commit(staged, table_path, instant)
     _hudi_complete(
         table_path, instant, "CLUSTER", stats, replaced_fids=replaced
@@ -6375,23 +6228,12 @@ def zorder_hudi(
                 F.spark_partition_id().cast("string"),
             ),
         )
-        .withColumn("__hudi_pp", F.col("__mpp"))
-        .withColumn(
-            "__hudi_pp_dir",
-            F.when(
-                F.col("__hudi_pp") == "", F.lit("__HUDI_ROOT__")
-            ).otherwise(F.col("__hudi_pp")),
-        )
-        .withColumn(
-            "_hoodie_file_name",
-            F.concat(F.col("__hudi_fid"), F.lit(f"_0-0-0_{instant}.parquet")),
-        )
     )
     business_cols = [
         c for c in df.columns
         if not c.startswith("_hoodie_") and c != "__fp"
     ]
-    staged = _hudi_select_order(out, business_cols)
+    staged = _hudi_staged(out, business_cols, instant, "__mpp")
     stats = _hudi_stage_commit(staged, table_path, instant)
     _hudi_complete(
         table_path, instant, "CLUSTER", stats, replaced_fids=replaced
@@ -6460,9 +6302,10 @@ def _hudi_rewrite_all(
         F.lit("-"),
         F.substring(F.md5(F.concat(F.lit(instant), pp_col)), 1, 8),
     )
-    staged = _hudi_select_order(
+    staged = _hudi_staged(
         _hudi_with_meta(content, record_key, partition_by, instant, fid, ts_render=ts_render),
         business_cols,
+        instant,
     )
     stats = _hudi_stage_commit(staged, table_path, instant)
     _hudi_complete(
@@ -6529,9 +6372,9 @@ def write_hudi(
     Returns the commit instant. Scale: the merge is one join keyed by
     record key + one shuffle by file group; untouched file groups cost
     NOTHING (no read, no write) — Hudi's own CoW economics. Timeline
-    completion is a single O_EXCL ``.commit`` create. The key frame is
-    size-gated (broadcast only for CDC-sized batches; AQE picks the
-    strategy for backfills) and the affected-group planning collect is
+    completion is a single put-if-absent ``.commit`` publish. The key
+    frame is size-gated (broadcast only for CDC-sized batches; AQE picks
+    the strategy for backfills) and the affected-group planning collect is
     LIMIT-bounded at ``max_affected_file_groups``: past the bound the
     whole table rewrites into fresh groups at one REPLACECOMMIT
     instant instead of planning per-group."""
@@ -6583,21 +6426,17 @@ def write_hudi(
             F.lit("-"),
             F.substring(F.md5(_hudi_partition_path_col(partition_by, df, ts_render)), 1, 8),
         )
-        staged = _hudi_select_order(
+        staged = _hudi_staged(
             _hudi_with_meta(df, record_key, partition_by, instant, fid, ts_render=ts_render),
             business_cols,
+            instant,
         )
         stats = _hudi_stage_commit(staged, table_path, instant)
         # Record the write schema like native Hudi does on EVERY
         # commit (r14: the reader's type-gated partition pruning needs
         # commit-schema types from the first commit on, not only after
         # an upsert); unmappable exotic types just omit it.
-        try:
-            sj = json.dumps(
-                _hudi_avro_schema([f for f in df.schema.fields])
-            )
-        except NotImplementedError:
-            sj = None
+        sj = _hudi_schema_json(df, df.columns)
         # MoR tables complete their writes as delta commits (Hudi's
         # own timeline convention for MERGE_ON_READ bulk inserts too).
         _hudi_complete(
@@ -6774,16 +6613,9 @@ def write_hudi(
             .join(keys, current["_hoodie_record_key"] == keys["__k"], "left_anti")
         )
 
-        new_fname = F.concat(F.col("__hudi_fid"), F.lit(f"_0-0-0_{instant}.parquet"))
         if mode == "delete":
-            staged = (
-                survivors.withColumn(
-                    "__hudi_pp_dir",
-                    F.when(F.col("_hoodie_partition_path") == "", F.lit("__HUDI_ROOT__"))
-                    .otherwise(F.col("_hoodie_partition_path")),
-                )
-                .withColumn("_hoodie_file_name", new_fname)
-                .select(*_HUDI_META_COLS, *business_cols, "__hudi_fid", "__hudi_pp_dir")
+            staged = _hudi_staged(
+                survivors, business_cols, instant, "_hoodie_partition_path"
             )
             stats = _hudi_stage_commit(staged, table_path, instant, expected_fids=expected)
             _hudi_complete(table_path, instant, "DELETE", stats)
@@ -6835,28 +6667,16 @@ def write_hudi(
         )
         surv_named = survivors.withColumn("__hudi_pp", F.col("_hoodie_partition_path"))
         cols = [*_HUDI_META_COLS, *business_cols, "__hudi_pp", "__hudi_fid"]
-        merged = surv_named.select(*cols).unionByName(batch_meta.select(*cols))
-        merged = (
-            merged.withColumn("_hoodie_file_name", new_fname)
-            .withColumn(
-                "__hudi_pp_dir",
-                F.when(F.col("__hudi_pp") == "", F.lit("__HUDI_ROOT__")).otherwise(
-                    F.col("__hudi_pp")
-                ),
-            )
-            .drop("__hudi_pp")
+        merged = _hudi_staged(
+            surv_named.select(*cols).unionByName(batch_meta.select(*cols)),
+            business_cols,
+            instant,
         )
         stats = _hudi_stage_commit(merged, table_path, instant, expected_fids=expected)
         # Record the (possibly evolved) write schema like native Hudi;
         # unmappable exotic types just omit it (CoW reads recover the
         # schema from the parquet files themselves).
-        cur_types = dict(zip(current.schema.names, current.schema.fields))
-        try:
-            sj = json.dumps(
-                _hudi_avro_schema([cur_types[c] for c in business_cols])
-            )
-        except NotImplementedError:
-            sj = None
+        sj = _hudi_schema_json(current, business_cols)
         _hudi_complete(table_path, instant, "UPSERT", stats, schema_json=sj)
         return instant
     finally:
@@ -6877,42 +6697,17 @@ def _hudi_fid_of_path():
     )
 
 
-def _hudi_where_update_select(
-    df: DataFrame, hit, assigns: dict[str, str], instant: str
-) -> DataFrame:
-    """The UPDATE projection: every SET expression evaluates against
-    the PRE-update row (one select — ``SET a = b, b = a`` swaps), cast
-    to the column's current type; hit rows take the new instant's
-    commit time + seqno (native CoW stamps updated records with the
-    writing instant), survivors keep theirs."""
-    types = {f.name: f.dataType for f in df.schema.fields}
-    sel = []
-    for c in df.columns:
-        if c in assigns:
-            sel.append(
-                F.when(hit, F.expr(assigns[c]).cast(types[c]))
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        elif c == "_hoodie_commit_time":
-            sel.append(
-                F.when(hit, F.lit(instant)).otherwise(F.col(c)).alias(c)
-            )
-        elif c == "_hoodie_commit_seqno":
-            sel.append(
-                F.when(
-                    hit,
-                    F.concat(
-                        F.lit(instant + "_"),
-                        F.monotonically_increasing_id().cast("string"),
-                    ),
-                )
-                .otherwise(F.col(c))
-                .alias(c)
-            )
-        else:
-            sel.append(F.col(c))
-    return df.select(*sel)
+def _hudi_hit_stamps(instant: str) -> dict:
+    """Commit meta an UPDATE-hit row takes: native CoW stamps updated
+    records with the writing instant's commit time + seqno; survivors
+    keep theirs."""
+    return {
+        "_hoodie_commit_time": F.lit(instant),
+        "_hoodie_commit_seqno": F.concat(
+            F.lit(instant + "_"),
+            F.monotonically_increasing_id().cast("string"),
+        ),
+    }
 
 
 def _hudi_rewrite_where(
@@ -6941,14 +6736,7 @@ def _hudi_rewrite_where(
     stay unmodified (SQL semantics). Returns (commit instant,
     affected row count); proving nothing matches commits nothing and
     returns (None, 0)."""
-    where_n = _norm_where(where)
-    if assigns is None and not where_n:
-        raise ValueError(
-            "DELETE requires a predicate (refusing an implicit "
-            "full-table delete; use truncate_hudi instead)"
-        )
-    if assigns is not None and not assigns:
-        raise ValueError("UPDATE requires at least one SET assignment")
+    where_n, hit = _dml_request(where, assigns)
     props = _hudi_table_properties(table_path)
     opname = "UPSERT" if assigns is not None else "DELETE"
     _hudi_guard_cow_write(
@@ -7009,11 +6797,6 @@ def _hudi_rewrite_where(
     if not affected_rows:
         return None, 0  # skipping proves no match: no commit at all
     instant = _hudi_new_instant(table_path)
-    hit = (
-        F.coalesce(_where_cond(where_n), F.lit(False))
-        if where_n
-        else F.lit(True)
-    )
     if len(affected_rows) > max_affected_file_groups:
         return _hudi_rewrite_where_all(
             spark, table_path, hit, assigns, instant, props, opname
@@ -7033,34 +6816,12 @@ def _hudi_rewrite_where(
         if not c.startswith("_hoodie_") and c != "__hudi_fid"
     ]
     n_aff = rewrite_df.filter(hit).count()
-    if assigns is None:
-        out = rewrite_df.filter(~hit)
-    else:
-        out = _hudi_where_update_select(rewrite_df, hit, assigns, instant)
-    staged = (
-        out.withColumn(
-            "__hudi_pp_dir",
-            F.when(
-                F.col("_hoodie_partition_path") == "",
-                F.lit("__HUDI_ROOT__"),
-            ).otherwise(F.col("_hoodie_partition_path")),
-        )
-        .withColumn(
-            "_hoodie_file_name",
-            F.concat(F.col("__hudi_fid"), F.lit(f"_0-0-0_{instant}.parquet")),
-        )
-        .select(*_HUDI_META_COLS, *business_cols, "__hudi_fid", "__hudi_pp_dir")
-    )
+    out = _dml_project(rewrite_df, hit, assigns, _hudi_hit_stamps(instant))
+    staged = _hudi_staged(out, business_cols, instant, "_hoodie_partition_path")
     stats = _hudi_stage_commit(
         staged, table_path, instant, expected_fids=expected
     )
-    try:
-        types = {f.name: f for f in rewrite_df.schema.fields}
-        sj = json.dumps(
-            _hudi_avro_schema([types[c] for c in business_cols])
-        )
-    except NotImplementedError:
-        sj = None
+    sj = _hudi_schema_json(rewrite_df, business_cols)
     _hudi_complete(table_path, instant, opname, stats, schema_json=sj)
     return instant, n_aff
 
@@ -7088,10 +6849,7 @@ def _hudi_rewrite_where_all(
         c for c in current.columns if not c.startswith("_hoodie_")
     ]
     n_aff = current.filter(hit).count()
-    if assigns is None:
-        content = current.filter(~hit)
-    else:
-        content = _hudi_where_update_select(current, hit, assigns, instant)
+    content = _dml_project(current, hit, assigns, _hudi_hit_stamps(instant))
     fid = F.concat(
         F.lit("fg"),
         F.pmod(
@@ -7103,32 +6861,17 @@ def _hudi_rewrite_where_all(
             1, 8,
         ),
     )
-    staged = (
-        content.withColumn("__hudi_fid", fid)
-        .withColumn(
-            "_hoodie_file_name",
-            F.concat(F.col("__hudi_fid"), F.lit(f"_0-0-0_{instant}.parquet")),
-        )
-        .withColumn(
-            "__hudi_pp_dir",
-            F.when(
-                F.col("_hoodie_partition_path") == "",
-                F.lit("__HUDI_ROOT__"),
-            ).otherwise(F.col("_hoodie_partition_path")),
-        )
-        .select(*_HUDI_META_COLS, *business_cols, "__hudi_fid", "__hudi_pp_dir")
+    staged = _hudi_staged(
+        content.withColumn("__hudi_fid", fid),
+        business_cols,
+        instant,
+        "_hoodie_partition_path",
     )
     stats = _hudi_stage_commit(staged, table_path, instant)
-    try:
-        types = {f.name: f for f in current.schema.fields}
-        sj = json.dumps(
-            _hudi_avro_schema([types[c] for c in business_cols])
-        )
-    except NotImplementedError:
-        sj = None
     _hudi_complete(
         table_path, instant, opname, stats,
-        replaced_fids=visible_before, schema_json=sj,
+        replaced_fids=visible_before,
+        schema_json=_hudi_schema_json(current, business_cols),
     )
     return instant, n_aff
 
@@ -7161,9 +6904,7 @@ def update_hudi_where(
     updates every row (legal SQL). Setting record-key or partition
     fields refuses (a key change is delete+insert; a partition move
     is MERGE's job)."""
-    if not isinstance(assigns, dict):
-        raise TypeError("assigns must be a {column: sql_expression} dict")
-    return _hudi_rewrite_where(spark, table_path, where, dict(assigns))
+    return _hudi_rewrite_where(spark, table_path, where, assigns)
 
 
 def alter_hudi_table(
@@ -7268,14 +7009,16 @@ def _iceberg_current_metadata_named(table_path: str) -> tuple[str, dict]:
     chosen = None
     hint = os.path.join(mdir, "version-hint.text")
     if os.path.isfile(hint):
-        with open(hint, encoding="ascii") as f:
+        with open(hint, encoding="ascii", errors="replace") as f:
             v = f.read().strip()
-        for name in (f"v{v}.metadata.json",):
-            if name in candidates:
-                chosen = name
-        if chosen is None:
+        # An empty or non-numeric hint (another writer's torn write) is
+        # no usable hint: fall through to the numeric listing below.
+        if v.isdigit():
             pref = [c for c in candidates if c.startswith(f"{int(v):05d}-")]
-            chosen = pref[0] if pref else None
+            if f"v{v}.metadata.json" in candidates:
+                chosen = f"v{v}.metadata.json"
+            elif pref:
+                chosen = pref[0]
     if chosen is None:
         # No usable hint: the Hadoop-catalog convention is UNPADDED
         # v<N>.metadata.json, where lexical order picks v9 over v10 —
@@ -7588,6 +7331,53 @@ def _where_residual(df: DataFrame, where_n: list[list[tuple]]) -> DataFrame:
     skipping keeps a SUPERSET of files; this makes the result exact."""
     cond = _where_cond(where_n)
     return df if cond is None else df.filter(cond)
+
+
+def _dml_request(where, assigns) -> tuple[list[list[tuple]], Column]:
+    """Front half of the three keyless DML engines (the Delta, Iceberg
+    and Hudi ``*_rewrite_where``): validates a DELETE (``assigns`` None)
+    or UPDATE request and returns (normalized where, ``hit``). ``hit``
+    marks the affected rows; a NULL predicate counts as not hit (SQL
+    semantics: only provably-TRUE rows are affected)."""
+    if assigns is not None and not isinstance(assigns, dict):
+        raise TypeError("assigns must be a {column: sql_expression} dict")
+    where_n = _norm_where(where)
+    if assigns is None and not where_n:
+        raise ValueError(
+            "DELETE requires a predicate (refusing an implicit "
+            "full-table delete; truncate or overwrite explicitly instead)"
+        )
+    if assigns is not None and not assigns:
+        raise ValueError("UPDATE requires at least one SET assignment")
+    hit = (
+        F.coalesce(_where_cond(where_n), F.lit(False))
+        if where_n
+        else F.lit(True)
+    )
+    return where_n, hit
+
+
+def _dml_project(
+    df: DataFrame, hit: Column, assigns: dict | None, stamps: dict | None = None
+) -> DataFrame:
+    """The keyless DML row projection: DELETE keeps the rows ``hit``
+    does not mark; UPDATE evaluates every SET expression against the
+    PRE-update row (one select — ``SET a = b, b = a`` swaps), cast to
+    the column's type, on hit rows only. ``stamps`` are further
+    {column: value} replacements hit rows take (Hudi's commit meta)."""
+    if assigns is None:
+        return df.filter(~hit)
+    types = {f.name: f.dataType for f in df.schema.fields}
+    new = {c: F.expr(e).cast(types[c]) for c, e in assigns.items()}
+    new.update(stamps or {})
+    return df.select(
+        *[
+            F.when(hit, new[c]).otherwise(F.col(c)).alias(c)
+            if c in new
+            else F.col(c)
+            for c in df.columns
+        ]
+    )
 
 
 def _utc_instant_lit(lit, session_tz: str | None):
@@ -8646,9 +8436,48 @@ def read_iceberg(
 # driver-side commit writes the Avro manifest + manifest list (via
 # formats/avro_lite, field-ids included) and the next v<N>.metadata.json
 # under the Hadoop-catalog convention (version-hint.text updated last).
-# Single-writer like write_delta: the metadata JSON is created O_EXCL.
+# Single-writer like write_delta: every metadata change commits through
+# ``_ice_commit_metadata``, a put-if-absent publish of the next version.
 
 _ICE_PART_FIELD_ID0 = 1000  # spec: partition field ids start at 1000
+
+
+def _ice_version_of(chosen: str | None, meta: dict) -> int:
+    """Metadata version of the current ``chosen`` file: N of the
+    ``v<N>.metadata.json`` name, else one past the metadata-log length
+    (other writers' ``%05d-uuid`` naming); 0 before the table exists."""
+    if chosen is None:
+        return 0
+    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
+    return int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
+
+
+def _ice_commit_metadata(
+    table_path: str,
+    chosen: str | None,
+    meta: dict,
+    new_meta: dict,
+    now_ms: int,
+) -> int:
+    """THE Iceberg commit: ``new_meta`` (derived from the current
+    ``chosen``/``meta``; both None/{} on create) gets ``chosen`` appended
+    to its metadata-log and ``last-updated-ms`` stamped, is published
+    put-if-absent as ``v<N+1>.metadata.json`` (FileExistsError when a
+    rival writer took the version) and only then named by
+    ``version-hint.text``. Returns the committed version."""
+    new_meta["last-updated-ms"] = now_ms
+    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + (
+        [{"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}]
+        if chosen
+        else []
+    )
+    version = _ice_version_of(chosen, meta) + 1
+    mdir = os.path.join(table_path, "metadata")
+    _publish(
+        os.path.join(mdir, f"v{version}.metadata.json"), json.dumps(new_meta)
+    )
+    _publish(os.path.join(mdir, "version-hint.text"), str(version), replace=True)
+    return version
 
 
 def _ice_type(dt, alloc) -> object:
@@ -10441,10 +10270,8 @@ def upgrade_iceberg_v1_to_v2(table_path: str) -> int:
 
     chosen, meta = _iceberg_current_metadata_named(table_path)
     fv = int(meta.get("format-version", 1))
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    cur_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     if fv == 2:
-        return cur_version
+        return _ice_version_of(chosen, meta)
     if fv != 1:
         raise NotImplementedError(
             f"cannot upgrade format-version {fv} (v1 -> v2 only)"
@@ -10518,22 +10345,7 @@ def upgrade_iceberg_v1_to_v2(table_path: str) -> int:
             s.pop("manifests", None)
         snaps.append(s)
     new_meta["snapshots"] = snaps
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    version = cur_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
 
 
 def upgrade_iceberg_v2_to_v3(table_path: str) -> int:
@@ -10556,10 +10368,8 @@ def upgrade_iceberg_v2_to_v3(table_path: str) -> int:
     version number."""
     chosen, meta = _iceberg_current_metadata_named(table_path)
     fv = int(meta.get("format-version", 1))
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    cur_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     if fv == 3:
-        return cur_version
+        return _ice_version_of(chosen, meta)
     if fv != 2:
         raise NotImplementedError(
             f"cannot upgrade format-version {fv} to 3 (v2 -> v3 only; "
@@ -10588,27 +10398,12 @@ def upgrade_iceberg_v2_to_v3(table_path: str) -> int:
                 "which v3 forbids — run compact_iceberg first to fold "
                 "them away"
             )
-    mdir = os.path.join(table_path, "metadata")
-    now_ms = int(time.time() * 1000)
     new_meta = dict(meta)
     new_meta["format-version"] = 3
     new_meta["next-row-id"] = int(meta.get("next-row-id", 0))
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    version = cur_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(
+        table_path, chosen, meta, new_meta, int(time.time() * 1000)
+    )
 
 
 def alter_iceberg_table(
@@ -10724,30 +10519,13 @@ def alter_iceberg_table(
     }
     if cur_schema.get("identifier-field-ids"):
         new_schema["identifier-field-ids"] = cur_schema["identifier-field-ids"]
-    now_ms = int(time.time() * 1000)
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    prev_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     new_meta = dict(meta)
     new_meta["schemas"] = list(meta.get("schemas", [])) + [new_schema]
     new_meta["current-schema-id"] = new_schema_id
     new_meta["last-column-id"] = counter[0]
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    mdir = os.path.join(table_path, "metadata")
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(
+        table_path, chosen, meta, new_meta, int(time.time() * 1000)
+    )
 
 
 def iceberg_default_spec_entries(table_path: str) -> list[str]:
@@ -10895,16 +10673,12 @@ def evolve_iceberg_partition_spec(
         ),
         {"fields": []},
     )
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    prev_version = (
-        int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
-    )
     if _shape(cur_spec.get("fields", [])) == _shape(new_fields):
-        return prev_version  # already the default layout: no commit
+        # already the default layout: no commit
+        return _ice_version_of(chosen, meta)
     new_spec_id = 1 + max(
         (int(s.get("spec-id", 0)) for s in specs), default=-1
     )
-    now_ms = int(time.time() * 1000)
     new_meta = dict(meta)
     new_meta["partition-specs"] = specs + [
         {"spec-id": new_spec_id, "fields": new_fields}
@@ -10913,25 +10687,9 @@ def evolve_iceberg_partition_spec(
     new_meta["last-partition-id"] = max(
         last_pid, int(meta.get("last-partition-id") or 0)
     )
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    mdir = os.path.join(table_path, "metadata")
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(
-        os.path.join(mdir, "version-hint.text"), "w", encoding="ascii"
-    ) as f:
-        f.write(str(version))
-    return version
+    return _ice_commit_metadata(
+        table_path, chosen, meta, new_meta, int(time.time() * 1000)
+    )
 
 
 def write_iceberg(
@@ -11064,10 +10822,6 @@ def write_iceberg(
             # survive); re-enrich for staging.
             part_fields = _ice_spec_part_fields(spec, cur_schema)
             spec_fields = spec.get("fields", spec_fields)
-        m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-        prev_version = (
-            int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
-        )
         if meta.get("current-snapshot-id") not in (None, -1):
             # append: carried forward in the new manifest list.
             # overwrite: rewritten as a DELETE-MARKING manifest below.
@@ -11083,7 +10837,6 @@ def write_iceberg(
         table_uuid = meta.get("table-uuid") or str(uuid.uuid4())
         prev_snapshots = list(meta.get("snapshots", []))
         prev_snap_log = list(meta.get("snapshot-log", []))
-        prev_meta_log = list(meta.get("metadata-log", []))
         parent_id = meta.get("current-snapshot-id")
         if parent_id in (None, -1):
             parent_id = None
@@ -11117,10 +10870,10 @@ def write_iceberg(
         }
     else:
         os.makedirs(mdir, exist_ok=True)
-        prev_version = 0
+        chosen, meta = None, {}
         last_seq = 0
         table_uuid = str(uuid.uuid4())
-        prev_snapshots, prev_snap_log, prev_meta_log = [], [], []
+        prev_snapshots, prev_snap_log = [], []
         parent_id = None
         location = table_path
         carry = None
@@ -11355,7 +11108,6 @@ def write_iceberg(
         "table-uuid": table_uuid,
         "location": location,
         "last-sequence-number": seq,
-        "last-updated-ms": now_ms,
         "last-column-id": last_col_id,
         **({"next-row-id": next_row_id + added_rows} if table_fv == 3 else {}),
         **registry,
@@ -11365,27 +11117,8 @@ def write_iceberg(
         "snapshots": prev_snapshots + [snap],
         "snapshot-log": prev_snap_log
         + [{"timestamp-ms": now_ms, "snapshot-id": snapshot_id}],
-        "metadata-log": (
-            prev_meta_log
-            + (
-                [{"timestamp-ms": now_ms,
-                  "metadata-file": f"metadata/v{prev_version}.metadata.json"}]
-                if exists
-                else []
-            )
-        ),
     }
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     return snapshot_id
 
 
@@ -12798,7 +12531,7 @@ def _ice_commit_snapshot(
     meta_updates: dict | None = None,
 ) -> int:
     """Write the manifest list, append the snapshot, and commit the
-    next metadata JSON (O_EXCL; version-hint updated last) — the
+    next metadata JSON (``_ice_commit_metadata``) — the
     shared tail of every snapshot-producing Iceberg write here.
     ``extra_snapshot`` merges extra keys into the snapshot record
     (v3 ``first-row-id``); ``meta_updates`` into the table metadata
@@ -12821,31 +12554,15 @@ def _ice_commit_snapshot(
         "schema-id": int(meta.get("current-schema-id", 0)),
         **(extra_snapshot or {}),
     }
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    prev_version = int(m.group(1)) if m else 1 + len(meta.get("metadata-log", []))
     new_meta = dict(meta)
     new_meta.update(meta_updates or {})
     new_meta["last-sequence-number"] = seq
-    new_meta["last-updated-ms"] = now_ms
     new_meta["current-snapshot-id"] = snapshot_id
     new_meta["snapshots"] = list(meta.get("snapshots", [])) + [new_snap]
     new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": now_ms, "snapshot-id": snapshot_id}
     ]
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    version = prev_version + 1
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     return snapshot_id
 
 
@@ -13104,14 +12821,7 @@ def _ice_rewrite_where(
     rows survive (SQL semantics)."""
     from .avro_lite import read_avro_file
 
-    where_n = _norm_where(where)
-    if assigns is None and not where_n:
-        raise ValueError(
-            "DELETE requires a predicate (refusing an implicit "
-            "full-table delete; overwrite explicitly instead)"
-        )
-    if assigns is not None and not assigns:
-        raise ValueError("UPDATE requires at least one SET assignment")
+    where_n, hit = _dml_request(where, assigns)
     chosen, meta = _iceberg_current_metadata_named(table_path)
     if int(meta.get("format-version", 1)) != 2:
         op_name = "UPDATE" if assigns is not None else "DELETE"
@@ -13132,7 +12842,6 @@ def _ice_rewrite_where(
                     f"UPDATE SET references unknown column {c!r} "
                     f"(table columns: {sorted(cols)})"
                 )
-    types = {f.name: f.dataType for f in schema.fields}
     spec = next(
         (
             s for s in meta.get("partition-specs", [])
@@ -13224,11 +12933,6 @@ def _ice_rewrite_where(
         spark, meta, table_path, cand_files,
         pos_delete_files, eq_deletes, schema, keep_path=True,
     )
-    hit = (
-        F.coalesce(_where_cond(where_n), F.lit(False))
-        if where_n
-        else F.lit(True)
-    )
     # Phase 2: only files HOLDING a matching live row rewrite; clean
     # candidates carry forward verbatim inside their manifests.
     touched = {
@@ -13240,23 +12944,9 @@ def _ice_rewrite_where(
     rewrite_df = scan.filter(F.col("__fp").isin(*sorted(touched)))
     n_aff = rewrite_df.filter(hit).count()
 
-    if assigns is None:
-        out_df = rewrite_df.filter(~hit).select(*cols)
-    else:
-        upd = []
-        for f in schema.fields:
-            if f.name in assigns:
-                new_v = F.expr(assigns[f.name]).cast(types[f.name])
-                upd.append(
-                    F.when(hit, new_v).otherwise(F.col(f.name)).alias(f.name)
-                )
-            else:
-                upd.append(F.col(f.name))
-        # SET expressions evaluate against the PRE-update row (one
-        # select — SQL semantics), cast to the declared column type;
-        # a partition-source SET moves rows: the restage re-derives
-        # partition values through the spec transforms.
-        out_df = rewrite_df.select(*upd).select(*cols)
+    # A partition-source SET moves rows: the restage re-derives
+    # partition values through the spec transforms.
+    out_df = _dml_project(rewrite_df, hit, assigns).select(*cols)
     retire = touched
 
     now_ms = int(time.time() * 1000)
@@ -13355,9 +13045,7 @@ def update_iceberg_where(
     ``where=None`` (or ``[]``) updates every row. The snapshot summary
     records the spec's ``overwrite`` operation. Returns (new snapshot
     id, updated row count); no match commits nothing."""
-    if not isinstance(assigns, dict):
-        raise TypeError("assigns must be a {column: sql_expression} dict")
-    return _ice_rewrite_where(spark, table_path, where, dict(assigns))
+    return _ice_rewrite_where(spark, table_path, where, assigns)
 
 
 def rewrite_iceberg_manifests(table_path: str) -> tuple[int | None, dict]:
@@ -13533,26 +13221,10 @@ def rollback_iceberg(table_path: str, snapshot_id: int) -> int:
     now_ms = int(time.time() * 1000)
     new_meta = dict(meta)
     new_meta["current-snapshot-id"] = sid
-    new_meta["last-updated-ms"] = now_ms
     new_meta["snapshot-log"] = list(meta.get("snapshot-log", [])) + [
         {"timestamp-ms": now_ms, "snapshot-id": sid}
     ]
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    version = (int(m.group(1)) if m else len(new_meta["metadata-log"])) + 1
-    mdir = os.path.join(table_path, "metadata")
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     return sid
 
 
@@ -13646,23 +13318,7 @@ def expire_iceberg_snapshots(table_path: str, keep_last: int = 2) -> dict:
     new_meta["snapshot-log"] = [
         e for e in meta.get("snapshot-log", []) if e.get("snapshot-id") in keep_ids
     ]
-    new_meta["last-updated-ms"] = now_ms
-    new_meta["metadata-log"] = list(meta.get("metadata-log", [])) + [
-        {"timestamp-ms": now_ms, "metadata-file": f"metadata/{chosen}"}
-    ]
-    m = re.fullmatch(r"v(\d+)\.metadata\.json", chosen)
-    version = (int(m.group(1)) if m else len(new_meta["metadata-log"])) + 1
-    mdir = os.path.join(table_path, "metadata")
-    meta_path = os.path.join(mdir, f"v{version}.metadata.json")
-    fd = os.open(meta_path, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-    try:
-        with os.fdopen(fd, "w", encoding="utf-8") as f:
-            json.dump(new_meta, f)
-    except Exception:
-        os.unlink(meta_path)
-        raise
-    with open(os.path.join(mdir, "version-hint.text"), "w", encoding="ascii") as f:
-        f.write(str(version))
+    _ice_commit_metadata(table_path, chosen, meta, new_meta, now_ms)
     # Metadata committed — deletions are now pure garbage collection.
     deleted = 0
     for p in sorted(dead):
@@ -13740,7 +13396,7 @@ def vacuum_delta(
 
     Files younger than ``grace_seconds`` (mtime) are SKIPPED — native
     VACUUM's retention-hours rationale (r10 advice #2): writers stage
-    parquet/DV files BEFORE their O_EXCL log commit, so an unreferenced
+    parquet/DV files BEFORE their log commit, so an unreferenced
     young file may be a commit in flight, and deleting it would commit
     a version referencing missing data. Pass 0 only when no writer can
     be running. Returns {"deleted_files", "deleted_cdc_files"}."""

@@ -71,7 +71,32 @@ _DEFAULT_LANE_KEEP = {
 }
 
 
+def _check_default_lane_keep(items):
+    """Fail collection when a keep pin names no test in its collected
+    file: a renamed pin would otherwise drop out of the default lane
+    silently. Checked against the module, so ``file::test`` node
+    selection and ``-k`` filters do not trip it."""
+    modules = {
+        os.path.basename(str(item.fspath)): item.module
+        for item in items
+        if getattr(item, "module", None) is not None
+    }
+    stale = sorted(
+        pin
+        for pin in _DEFAULT_LANE_KEEP
+        if pin.split("::")[0] in modules
+        and not callable(
+            getattr(modules[pin.split("::")[0]], pin.split("::")[1], None)
+        )
+    )
+    if stale:
+        raise pytest.UsageError(
+            f"_DEFAULT_LANE_KEEP entries match no collected test: {stale}"
+        )
+
+
 def pytest_collection_modifyitems(config, items):
+    _check_default_lane_keep(items)
     if os.environ.get("TDL_DEEP_TESTS", "0") == "1":
         return
     skip = pytest.mark.skip(
